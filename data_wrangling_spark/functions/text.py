@@ -48,10 +48,6 @@ def punct_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(r"[\.,;:!\?]"))
 
 
-def stopword_count(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    return stopword_count_from_tokens(tokens(col), stopwords)
-
-
 def stopword_count_from_tokens(
     toks: Column, stopwords: list[str] | None = None
 ) -> Column:

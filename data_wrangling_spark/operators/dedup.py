@@ -1045,15 +1045,6 @@ def _quantize_micro(vec_col: str | F.Column, scale: int) -> F.Column:
     )
 
 
-def _int_dot(a: str, b: str) -> F.Column:
-    """Exact int64 dot product of two array<bigint> columns."""
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _exact_int_matmul_guard(q, d: int) -> None:
     """The float64 matmuls below are EXACT only while every partial sum
     stays under 2^53: |v| ≤ sqrt(2^53/d) (≈1.18e7 at d=64, i.e. raw

@@ -56,7 +56,8 @@ def prefix_sum(
     plan must be DETERMINISTIC (or cached): a non-deterministic upstream
     (sampling, rand(), non-idempotent source) would compute the spliced
     offsets from a DIFFERENT execution than the main job, silently
-    corrupting the running sums — same caveat as ``asof_join_adaptive``.
+    corrupting the running sums — same caveat as ``asof_join`` with
+    ``bucket_seconds`` set and ``heavy_threshold > 0``.
 
     ``order_col`` must be an integral, NON-NULL column and should be
     unique per row (ties share a range bucket, so correctness of the

@@ -22,15 +22,18 @@ key) — the 100 TB-safe shape:
 
 Skew note: both partition by the entity key; the window is linear in
 the key's row count but runs as ONE task per key — the one skew shape
-AQE cannot split. ``asof_join_adaptive`` is the scale-safe default:
-one cheap hash-bucket counting job detects heavy keys, and ONE carry
-window runs on (key, time-bucket) for those keys and (key, 0) for the
-uniform mass — plain ``asof_join``'s pipeline plus a tiny broadcast.
+AQE cannot split. ``asof_join(bucket_seconds=...)`` is the scale-safe
+form: one cheap hash-bucket counting job detects heavy keys, and ONE
+carry window runs on (key, time-bucket) for those keys and (key, 0) for
+the uniform mass — the plain pipeline plus a thin boundary pre-pass
+(``heavy_threshold=0`` buckets every key and skips detection).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -56,6 +59,9 @@ def asof_join(
     payload: dict[str, str],
     direction: str = "backward",
     right_tiebreak: str | None = None,
+    bucket_seconds: int | None = None,
+    heavy_threshold: int = 1_000_000,
+    detection_buckets: int = 1 << 16,
 ) -> DataFrame:
     """For each left row, attach the payload of the most recent right row
     with the same ``on`` key and right_time <= left_time (direction
@@ -68,8 +74,7 @@ def asof_join(
     right ROW atomically: a NULL payload field in the winning right row
     stays NULL in the output instead of being silently backfilled from
     an older right row (per-column carries stitch fields from different
-    rows — the round-3 advice defect). One window expression also
-    evaluates cheaper than N.
+    rows). One window expression also evaluates cheaper than N.
 
     Ties on right_time: either pre-deduplicate the right side, or pass
     ``right_tiebreak`` — a right-side column; among right rows with equal
@@ -80,7 +85,9 @@ def asof_join(
     pre-dedup — the same rows flow through the one hash exchange this
     operator already needs. For smallest-wins semantics, negate into a
     helper column and pass that. Row-atomic carry makes this equivalence
-    exact even with NULL payload fields.
+    exact even with NULL payload fields. Equal (key, time, tiebreak)
+    right rows with different payloads are nondeterministic — make the
+    tiebreak unique.
 
     direction 'forward' attaches the EARLIEST right row at-or-after
     left_time instead (DuckDB: ``ASOF LEFT JOIN ... ON l.t <= r.t``) —
@@ -88,9 +95,114 @@ def asof_join(
     (``right_tiebreak`` still means greatest-wins: the traversal is
     reversed in time only; equal-time right rows keep ascending tiebreak
     order before their left rows.)
+
+    Skew policy. With ``bucket_seconds=None`` (the default) the carry
+    window partitions on the key alone, so a key holding 1% of a 100 TB
+    stream puts 1 TB through ONE task — the one skew shape AQE cannot
+    split. Setting ``bucket_seconds`` partitions hot keys' windows on
+    (key, floor(time / bucket_seconds)) instead; see ``_asof_bucketed``
+    for how each bucket is seeded. Results are exactly the plain form's
+    in every mode (pinned by equivalence tests and a pandas
+    ``merge_asof`` reference). Pick ``bucket_seconds`` so a hot key's
+    densest bucket fits a task (e.g. daily buckets for a key doing ~1M
+    rows/day). ``heavy_threshold`` then picks the mode:
+
+    - ``0``: EVERY key is bucketed and no detection runs — fully lazy.
+      Structurally wasteful on uniform keys (a light key touches about
+      as many buckets as it has rows: 3.1M summary rows from 5M inputs
+      at weekly buckets on uniform bench data), so use it only when
+      every key is known to be hot.
+    - ``> 0`` (default 1M, the max rows one carry-window task should
+      absorb — ~tens of MB sorted): EAGER — runs one detection job at
+      CALL time, before any action on the result, and the upstream
+      plans run again in the main job. Cache EXPENSIVE DERIVED inputs
+      first (raw scans need no cache: detection reads one column), and
+      keep the inputs DETERMINISTIC, or detection and the main job see
+      different rows. With no heavy bucket the function returns the
+      plain PLAN VERBATIM; otherwise ONE carry window runs on (key,
+      bucket) for keys in heavy buckets and (key, 0) for the rest,
+      routed by a LITERAL ``isin`` predicate — no join, no broadcast.
+
+    Why eager: a lazy form (empty broadcast + AQE empty-relation
+    erasure) measured ~0.6 s of inert machinery on top of a 0.3 s
+    detection job at 20x bench scale; the eager form's uniform-key
+    overhead is exactly the detection job (1.21x plain at 20x, ~1.0x at
+    100x).
+
+    Why hash buckets, not keys: per-key counting over a high-cardinality
+    keyspace defeats map-side partial aggregation (the partials emit
+    ~one row per distinct key per task — ~1 s of a 3.1 s query at 100x,
+    sampled or not), while ``xxhash64(key) % detection_buckets`` caps
+    every task's partial output at ``detection_buckets`` rows. A bucket
+    whose mass exceeds ``heavy_threshold`` flags ALL its keys heavy:
+    false positives only route extra keys through the bucketed path
+    (result-identical, marginal cost), false negatives are impossible
+    (a heavy key's bucket mass >= its own count), and NULL keys hash
+    like any value. Size ``detection_buckets`` so total_rows / buckets
+    stays well under ``heavy_threshold`` and under ~rows-per-task — at
+    10^12 rows and the 1M threshold, 2^22 buckets gives ~240k expected
+    mass and a 4M-row detection shuffle. Shrink both for wide rows and
+    benchmark rigs, the way SCALING.md shrinks the AQE skew thresholds.
+
+    Why one pipeline: routing heavy keys through a separate bucketed
+    pipeline (semi/anti broadcast-join split) scanned each table twice
+    and ran two full windows — ~2.5x plain at 20x even with a small
+    heavy share. Here the wide data flows ONCE: scan -> literal routing
+    -> one exchange on (key, effective bucket) -> window -> project.
     """
     if direction not in ("backward", "forward"):
         raise ValueError("direction must be 'backward' or 'forward'")
+    if bucket_seconds is not None and bucket_seconds <= 0:
+        raise ValueError("bucket_seconds must be positive")
+    if heavy_threshold < 0:
+        raise ValueError("heavy_threshold must be non-negative")
+    if detection_buckets <= 0:
+        raise ValueError("detection_buckets must be positive")
+
+    if bucket_seconds is not None:
+        if heavy_threshold == 0:
+            return _asof_bucketed(
+                left, right, on, left_time, right_time, payload, direction,
+                right_tiebreak, bucket_seconds, None,
+            )
+        # EVERY hash site must see the key at ONE type: xxhash64 hashes
+        # IntegerType and LongType differently, so hashing each side's
+        # native dtype would bucket the SAME key value differently across
+        # detection, the boundary pre-pass and the wide routing — a heavy
+        # key's rows would land in bucketed partitions whose boundary
+        # seeds were never built. The canonical type is the union-promoted
+        # key type, the one the wide pass carries.
+        key_type = (
+            left.select(F.col(on).alias("_k"))
+            .unionByName(right.select(F.col(on).alias("_k")))
+            .schema["_k"]
+            .dataType
+        )
+        hb_of = lambda c: F.pmod(  # noqa: E731
+            F.xxhash64(c.cast(key_type), F.lit(41)), F.lit(detection_buckets)
+        )
+        # control-plane collect: <= detection_buckets ids, usually zero (the
+        # exact-quantiles / IVF-centroid pattern — never data-sized)
+        heavy_ids = [
+            r["_hb"]
+            for r in (
+                left.select(hb_of(F.col(on)).alias("_hb"))
+                .unionByName(right.select(hb_of(F.col(on)).alias("_hb")))
+                .groupBy("_hb")
+                .agg(F.count(F.lit(1)).alias("_n"))
+                .filter(F.col("_n") > F.lit(heavy_threshold))
+                .select("_hb")
+                .collect()
+            )
+        ]
+        if heavy_ids:
+            # literal predicate (Catalyst converts long isin lists to an
+            # O(1) InSet); with none, fall through to the plain plan
+            return _asof_bucketed(
+                left, right, on, left_time, right_time, payload, direction,
+                right_tiebreak, bucket_seconds,
+                lambda c: hb_of(c).isin(heavy_ids),
+            )
 
     lcols = [c for c in left.columns]
     # right rows sort BEFORE left rows at equal timestamps (marker 0 < 1)
@@ -170,147 +282,108 @@ def asof_join(
     )
 
 
-def asof_join_bucketed(
+def _asof_bucketed(
     left: DataFrame,
     right: DataFrame,
     on: str,
     left_time: str,
     right_time: str,
     payload: dict[str, str],
+    direction: str,
+    right_tiebreak: str | None,
     bucket_seconds: int,
-    direction: str = "backward",
-    right_tiebreak: str | None = None,
+    is_heavy: Callable[[Column], Column] | None,
 ) -> DataFrame:
-    """``asof_join`` with the per-key window split into fixed-width time
-    buckets — the skew-safe form for hot keys.
+    """``asof_join``'s skew-safe body: ONE carry window partitioned on
+    (key, time bucket) for keys where ``is_heavy`` holds and (key, 0)
+    for the rest; ``is_heavy=None`` buckets every key.
 
-    The plain operator partitions the carry window by the join key: a
-    key holding 1% of a 100 TB event stream puts 1 TB of rows through
-    ONE task, and AQE cannot split a window partition the way it splits
-    a skewed join partition. Here the shuffle/window key is
-    (key, floor(time / bucket_seconds)), so a hot key's rows spread
-    across its time buckets; what crosses bucket boundaries is one
-    pre-aggregated payload row per (key, bucket) — never the raw data.
+    Within a partition the plain union-marker carry runs in plain's
+    order — light partitions hold a whole key (time asc, NULLs first
+    going backward / last going forward, matching plain's asc/desc
+    traversal), heavy partitions hold one bucket, seeded by a boundary
+    row carrying the latest right payload over all strictly-earlier
+    buckets (``_s = -inf`` sorts it first; real times are finite).
+    ``direction='forward'`` reuses the backward machinery on negated
+    time (max -t with -rt <= -lt IS min rt with rt >= lt; the
+    greatest-tiebreak rule is direction-invariant).
 
-    Results are EXACTLY ``asof_join``'s (pinned by equivalence tests):
-    within a bucket the same union-marker carry runs, seeded by a
-    boundary row holding the latest (direction-wise) right payload over
-    all strictly-earlier buckets. ``direction='forward'`` reuses the
-    backward machinery on negated time (max -t with -rt <= -lt IS min
-    rt with rt >= lt; the greatest-tiebreak rule is direction-
-    invariant).
-
-    Cost vs ``asof_join``: one extra NARROW pre-pass, nothing else.
-    Two earlier shapes measured 2.3-3.2x the plain form on uniform keys
-    and motivated this one:
-
-    - round 5 paid three pre-passes (right summary groupBy, left
-      DISTINCT buckets so left-only buckets got boundary coverage, a
-      boundary window over their join);
-    - the first round-6 attempt shared one explicit repartition between
-      the carry window and the summary aggregate and joined boundaries
-      back to the window output — but per-branch column pruning makes
-      the two exchange subplans non-identical, so ReusedExchange never
-      fires and the input was scanned AND shuffled twice, with the
-      explicit repartition also defeating the summary's map-side
-      partial aggregation (full-width shuffle before the agg).
-
-    This form: ONE thin union (key, scaled time, marker, tiebreak,
-    payload — no left carry columns) feeds the per-(key, bucket)
-    summary, whose partial max_by runs ON THE SCAN TASKS so the
-    summary shuffle carries only per-task per-bucket partials; left
-    rows ride the thin union too (outranked by any right row), which
-    is what gives LEFT-ONLY buckets a summary row — and therefore
-    boundary coverage — without round 5's separate distinct pass. The
-    boundary window over summaries is O(touched buckets), and boundary
-    rows are UNIONED into the big exchange as seed rows (marker -1,
-    NULL time, sorting first in each (key, bucket) partition) — no
-    join back, so the wide data flows scan -> one exchange -> window
-    -> project, exactly the plain operator's pipeline on a finer key.
-
-    Equal (key, time, tiebreak) right rows with different payloads are
-    nondeterministic in BOTH operators — make the tiebreak unique.
-    Pick ``bucket_seconds`` so a hot key's densest bucket fits a task
-    comfortably (e.g. daily buckets for a key doing ~1M rows/day)."""
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
-    if bucket_seconds <= 0:
-        raise ValueError("bucket_seconds must be positive")
-
+    What crosses bucket boundaries is one pre-aggregated payload row
+    per (key, bucket), never the raw data: a THIN union (key, scaled
+    time, marker, tiebreak, payload — no left carry columns) of the
+    heavy rows feeds a per-(key, bucket) ``max_by`` whose partials run
+    on the scan tasks, and the boundary seeds UNION into the one wide
+    exchange rather than joining back. Two earlier shapes measured
+    2.3-3.2x plain on uniform keys: separate right-summary, left-
+    distinct and boundary passes; and one repartition shared between
+    window and summary, which per-branch column pruning keeps from
+    ever being reused (input scanned and shuffled twice)."""
     sign = 1.0 if direction == "backward" else -1.0
     lcols = list(left.columns)
     # the key is not stored twice when _k can exactly reconstruct it
-    # (same guard as plain asof_join: a union type promotion would
-    # otherwise change the output schema); _s is sign-scaled double, so
+    # (same guard as the plain form); _s is sign-scaled double, so
     # left_time always rides as a carry column here
-    key_reconstructable = (
-        left.schema[on].dataType == right.schema[on].dataType
-    )
+    key_reconstructable = left.schema[on].dataType == right.schema[on].dataType
     carry_cols = [c for c in lcols if c != on or not key_reconstructable]
-    w_lit = float(bucket_seconds)
-
-    l_s = (_seconds(left, left_time) * sign).alias("_s")
-    r_s = (_seconds(right, right_time) * sign).alias("_s")
-    tb_type = right.schema[right_tiebreak].dataType if right_tiebreak else None
-
     # NULL times get a sentinel bucket at the START of the traversal —
-    # which is bucket -2^63 going backward but +2^63-1 going forward,
-    # because plain asof_join orders by _t asc (nulls FIRST) backward
-    # and _t desc (nulls LAST) forward: backward, a null-time right row
-    # is 'earliest' and carries into every later row until superseded;
-    # forward, null-time rows trail the whole traversal and only see
-    # each other plus the final boundary. The sentinel reproduces both
-    # orderings exactly (pinned by the null-time equivalence test; the
-    # round-5 review caught the forward case diverging when NULLs
-    # grouped into SQL's one NULL bucket, which sorts first both ways).
+    # -2^63 backward, +2^63-1 forward — because plain orders _t asc
+    # (nulls FIRST) backward and _t desc (nulls LAST) forward: backward
+    # a null-time right row is 'earliest' and carries into every later
+    # row; forward null-time rows trail the traversal and only see each
+    # other plus the final boundary. (SQL's single NULL group sorts
+    # first both ways, which would diverge forward.)
     null_bucket = -(2**63) if direction == "backward" else 2**63 - 1
-    # bucket index clamped to +-4e18 before the long cast: ANY monotone-
-    # in-time bucket assignment is semantically safe (buckets only split
-    # the carry; merging distant buckets is harmless), and the clamp
-    # keeps extreme-but-finite numeric times (e.g. raw nanos with tiny
-    # bucket_seconds) from overflowing the ANSI cast. NaN/+-inf times
-    # remain a documented precondition violation: they fail loudly at
-    # the cast under ANSI (the session default) instead of silently
-    # misordering.
-    # greatest/least SKIP NULLs (they would swallow the sentinel), so
-    # the NULL branch is an explicit when, not a coalesce
+    # the bucket index is clamped to +-4e18 before the long cast: ANY
+    # monotone-in-time bucketing is safe (buckets only split the carry),
+    # and the clamp keeps extreme-but-finite numeric times from
+    # overflowing the ANSI cast. NaN/+-inf times are a precondition
+    # violation and fail loudly at that cast. greatest/least SKIP NULLs
+    # (they would swallow the sentinel), hence the explicit when.
     bucket_of = lambda s: F.when(  # noqa: E731
         s.isNull(), F.lit(null_bucket).cast("long")
     ).otherwise(
         F.least(
-            F.greatest(F.floor(s / w_lit), F.lit(-4e18)), F.lit(4e18)
+            F.greatest(F.floor(s / float(bucket_seconds)), F.lit(-4e18)),
+            F.lit(4e18),
         ).cast("long")
     )
-    p_expr = F.struct(
-        *[F.col(src).alias(dst) for src, dst in payload.items()]
+    tb_type = right.schema[right_tiebreak].dataType if right_tiebreak else None
+    tb_null = [F.lit(None).cast(tb_type).alias("_tb")] if right_tiebreak else []
+    null_lc = [
+        F.lit(None).cast(left.schema[c].dataType).alias(f"_lc_{c}")
+        for c in carry_cols
+    ]
+    r_rows = right.select(
+        F.col(on).alias("_k"),
+        (_seconds(right, right_time) * sign).alias("_s"),
+        F.lit(0).alias("_m"),
+        *null_lc,
+        F.struct(*[F.col(src).alias(dst) for src, dst in payload.items()]).alias("_p"),
+        *([F.col(right_tiebreak).alias("_tb")] if right_tiebreak else []),
     )
-    tb_r = [F.col(right_tiebreak).alias("_tb")] if right_tiebreak else []
-    tb_null = (
-        [F.lit(None).cast(tb_type).alias("_tb")] if right_tiebreak else []
+    l_rows = left.select(
+        F.col(on).alias("_k"),
+        (_seconds(left, left_time) * sign).alias("_s"),
+        F.lit(1).alias("_m"),
+        *[F.col(c).alias(f"_lc_{c}") for c in carry_cols],
+        F.lit(None).cast(r_rows.schema["_p"].dataType).alias("_p"),
+        *tb_null,
     )
+    wide = l_rows.unionByName(r_rows)
 
     # THIN pre-pass: per-(key, bucket) winning right payload. Any right
-    # row outranks every left row (left rows ride the thin union only
-    # so LEFT-ONLY buckets still get a summary row — _pb NULL there —
-    # which is what lets the boundary window cover them without a
-    # separate distinct pass); among right rows, greatest (time,
-    # tiebreak) wins, matching the carry window's (_s asc, _m, _tb asc)
-    # + last() order exactly. No repartition here: the partial max_by
-    # compacts on the scan tasks, so the shuffle is O(buckets/task).
-    r_thin = right.select(
-        F.col(on).alias("_k"), r_s, F.lit(0).alias("_m"),
-        p_expr.alias("_p"), *tb_r,
-    ).withColumn("_bk", bucket_of(F.col("_s")))
-    p_type = r_thin.schema["_p"].dataType
-    l_thin = left.select(
-        F.col(on).alias("_k"), l_s, F.lit(1).alias("_m"),
-        F.lit(None).cast(p_type).alias("_p"), *tb_null,
-    ).withColumn("_bk", bucket_of(F.col("_s")))
+    # row outranks every left row; left rows ride along only so that
+    # LEFT-ONLY buckets get a summary row (_pb NULL) and hence boundary
+    # coverage. Among right rows greatest (time, tiebreak) wins, matching
+    # the carry window's (_s asc, _m, _tb asc) + last() order exactly.
+    thin = wide.select("_k", "_s", "_m", "_p", *(["_tb"] if right_tiebreak else []))
+    if is_heavy is not None:
+        thin = thin.filter(is_heavy(F.col("_k")))
     ord_fields = [(F.lit(1) - F.col("_m")).alias("r"), F.col("_s").alias("s")]
     if right_tiebreak:
         ord_fields.append(F.col("_tb").alias("t"))
     summary = (
-        l_thin.unionByName(r_thin)
+        thin.withColumn("_bk", bucket_of(F.col("_s")))
         .groupBy("_k", "_bk")
         .agg(F.max_by("_p", F.struct(*ord_fields)).alias("_pb"))
     )
@@ -321,338 +394,37 @@ def asof_join_bucketed(
         .orderBy("_bk")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    boundary = summary.select(
-        "_k",
-        "_bk",
-        F.last("_pb", ignorenulls=True).over(carry_w).alias("_p"),
-    ).filter(F.col("_p").isNotNull())
-
-    # WIDE pass: boundary seed rows union into the one big exchange.
-    # Marker order inside a (key, bucket) partition: boundary(-1) first
-    # (NULL _s + asc_nulls_first also sorts it before real rows), then
-    # right(0) before left(1) at equal times — identical to asof_join.
-    null_lc = [
-        F.lit(None).cast(left.schema[c].dataType).alias(f"_lc_{c}")
-        for c in carry_cols
-    ]
-    b_rows = boundary.select(
-        "_k", F.lit(None).cast("double").alias("_s"), "_bk",
-        F.lit(-1).alias("_m"), *null_lc, "_p", *tb_null,
-    )
-    r_rows = right.select(
-        F.col(on).alias("_k"), r_s, F.lit(0).alias("_m"), *null_lc,
-        p_expr.alias("_p"), *tb_r,
-    ).withColumn("_bk", bucket_of(F.col("_s"))).select(*b_rows.columns)
-    l_rows = left.select(
-        F.col(on).alias("_k"), l_s, F.lit(1).alias("_m"),
-        *[F.col(c).alias(f"_lc_{c}") for c in carry_cols],
-        F.lit(None).cast(p_type).alias("_p"), *tb_null,
-    ).withColumn("_bk", bucket_of(F.col("_s"))).select(*b_rows.columns)
-
-    order_cols = [F.col("_s").asc_nulls_first(), F.col("_m")] + (
-        [F.col("_tb").asc_nulls_first()] if right_tiebreak else []
-    )
-    w = (
-        Window.partitionBy("_k", "_bk")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = b_rows.unionByName(r_rows).unionByName(l_rows).select(
-        "_m",
-        "_k",
-        *[f"_lc_{c}" for c in carry_cols],
-        F.last("_p", ignorenulls=True).over(w).alias("_c"),
-    )
-    return carried.filter(F.col("_m") == 1).select(
-        *[
-            (
-                F.col("_k") if c == on and key_reconstructable
-                else F.col(f"_lc_{c}")
-            ).alias(c)
-            for c in lcols
-        ],
-        *[F.col(f"_c.{dst}").alias(dst) for dst in payload.values()],
-    )
-
-
-def asof_join_adaptive(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    payload: dict[str, str],
-    bucket_seconds: int,
-    direction: str = "backward",
-    right_tiebreak: str | None = None,
-    heavy_threshold: int = 1_000_000,
-    detection_buckets: int = 1 << 16,
-) -> DataFrame:
-    """The scale-safe DEFAULT as-of join: ONE carry window whose
-    partition key is (key, time-bucket) for detected hot keys and
-    (key, 0) for everything else — so the uniform mass runs exactly
-    plain ``asof_join``'s one-shuffle pipeline while no key can ever
-    put more than ~one bucket of rows through a single window task
-    (the one skew shape AQE cannot split).
-
-    API CONTRACT — EAGER, runs a job at CALL time (advisor note,
-    round 7): calling this function executes one input-sized detection
-    scan + O(buckets) collect BEFORE any action on the returned
-    DataFrame, and the upstream plans are recomputed again by the main
-    job. Callers that (a) build plans without executing them should use
-    plain :func:`asof_join` or :func:`asof_join_bucketed` (both fully
-    lazy), and (b) pass EXPENSIVE DERIVED inputs should ``.cache()``
-    them first so the detection pass doesn't recompute the upstream
-    pipeline (raw table scans — the common case — need no cache: the
-    detection pass reads two columns and parquet pruning makes it
-    cheap). Details of why eager beats lazy here are at the end of this
-    docstring.
-
-    Why not route hot keys through ``asof_join_bucketed`` as a second
-    pipeline: measured at 20x bench scale, splitting the inputs via
-    semi/anti broadcast joins scanned each table twice and ran two full
-    window pipelines — ~2.5x plain even when the bucketed share was
-    small. Here the wide data flows ONCE: scan -> route by a LITERAL
-    heavy-bucket predicate (a heavy NULL key routes with its partition
-    because detection hashes the key) -> one exchange on (key,
-    effective-bucket) -> window -> project. The only extra input-sized
-    work over plain is the detection pass and the boundary pre-pass,
-    and the boundary pre-pass is filtered to HEAVY rows only — the
-    regime where a hot key's (key, bucket) summary genuinely compacts
-    (a uniform key has ~as many touched buckets as rows, which is why
-    bucketing everything is structurally wasteful — measured: 3.1M
-    summary rows from 5M inputs at weekly buckets on uniform bench
-    data).
-
-    Ordering is plain ``asof_join``'s within every partition: light
-    partitions hold a whole key (time asc, NULLs first going backward /
-    last going forward — matching plain's asc/desc traversal exactly);
-    heavy partitions hold one bucket, seeded by a boundary row carrying
-    the latest right payload from all strictly-earlier buckets
-    (``_s = -inf`` so the seed sorts first; real timestamps are finite).
-    Heavy NULL-time rows isolate in the direction-appropriate sentinel
-    bucket, same as ``asof_join_bucketed``. Result-identical to plain
-    by construction (pinned by equivalence tests, including NULL keys,
-    NULL times, and both directions).
-
-    Detection runs EAGERLY at call time: one O(buckets) aggregate whose
-    result — the set of heavy bucket ids, usually empty — is collected
-    as control-plane rows (<= ``detection_buckets``, the same O(k)/
-    O(strata) pattern as the quantile cut-points and IVF centroids).
-    With NO heavy bucket the function returns plain ``asof_join``'s
-    PLAN VERBATIM — zero machinery, not even an erased join — and with
-    heavy buckets the routing is a literal ``isin`` predicate, so the
-    wide pass needs no broadcast join at all. An earlier design kept
-    detection lazy (empty-broadcast + AQE empty-relation propagation
-    erasing the machinery); measured at 20x bench scale the inert
-    machinery still cost ~0.6s on top of the 0.3s detection job — AQE
-    stage sequencing and the flag-join residue don't amortize below
-    ~100x — while the eager form's uniform overhead is exactly the
-    detection job.
-
-    Detection counts HASH BUCKETS of the key, not keys: per-key
-    counting over a high-cardinality keyspace defeats map-side partial
-    aggregation (the partials emit ~one row per distinct key per task —
-    measured ~1s of a 3.1s query at 100x bench scale, sampled or not),
-    while counting ``xxhash64(key) % detection_buckets`` caps every
-    task's partial output at ``detection_buckets`` rows, so the
-    detection shuffle is O(buckets) regardless of data size. A bucket
-    whose total mass exceeds ``heavy_threshold`` flags ALL its keys
-    heavy. False positives (light keys sharing a flagged bucket, or
-    several light keys summing past the threshold) only route extra
-    keys through the bucketed-window path — result-identical, marginal
-    cost; false negatives are impossible (a heavy key's bucket mass >=
-    its own count). NULL keys hash like any value, so no null-safe
-    machinery is needed anywhere.
-
-    ``heavy_threshold`` is the max rows a single carry-window task
-    should absorb: the 1M default sorts ~tens of MB per task. Size it
-    DOWN for wide rows and benchmark rigs (SCALING.md's GB-scale skew
-    section shrinks it the same way it shrinks the AQE skew
-    thresholds). Size ``detection_buckets`` (default 2^16) so expected
-    bucket mass total_rows / buckets stays well under heavy_threshold
-    (keeps false positives rare) while staying under ~rows-per-task
-    (keeps the partial compaction) — at 10^12 rows and the 1M default
-    threshold, 2^22 buckets gives ~240k expected mass and a still-tiny
-    4M-row detection shuffle."""
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
-    if bucket_seconds <= 0:
-        raise ValueError("bucket_seconds must be positive")
-    if heavy_threshold <= 0:
-        raise ValueError("heavy_threshold must be positive")
-    if detection_buckets <= 0:
-        raise ValueError("detection_buckets must be positive")
-
-    sign = 1.0 if direction == "backward" else -1.0
-    lcols = list(left.columns)
-    key_reconstructable = (
-        left.schema[on].dataType == right.schema[on].dataType
-    )
-    carry_cols = [c for c in lcols if c != on or not key_reconstructable]
-    w_lit = float(bucket_seconds)
-    null_bucket = -(2**63) if direction == "backward" else 2**63 - 1
-    # bucket index clamped to +-4e18 before the long cast: ANY monotone-
-    # in-time bucket assignment is semantically safe (buckets only split
-    # the carry; merging distant buckets is harmless), and the clamp
-    # keeps extreme-but-finite numeric times (e.g. raw nanos with tiny
-    # bucket_seconds) from overflowing the ANSI cast. NaN/+-inf times
-    # remain a documented precondition violation: they fail loudly at
-    # the cast under ANSI (the session default) instead of silently
-    # misordering.
-    # greatest/least SKIP NULLs (they would swallow the sentinel), so
-    # the NULL branch is an explicit when, not a coalesce
-    bucket_of = lambda s: F.when(  # noqa: E731
-        s.isNull(), F.lit(null_bucket).cast("long")
-    ).otherwise(
-        F.least(
-            F.greatest(F.floor(s / w_lit), F.lit(-4e18)), F.lit(4e18)
-        ).cast("long")
-    )
-
-    # ---- detection: heavy hash-buckets, one eager O(buckets) job -------
-    # xxhash64(NULL) is the (non-null) seed hash, so NULL keys land in a
-    # bucket like any value — no null-safe machinery needed anywhere.
-    # EVERY hash site must see the key at ONE type: xxhash64 hashes
-    # IntegerType and LongType differently (4- vs 8-byte primitive
-    # paths), so hashing each side's native dtype would bucket the SAME
-    # key value differently across detection / thin pre-pass / wide
-    # routing when the sides' key dtypes differ — splitting a key's mass
-    # across detection buckets (false negatives) and, worse, routing
-    # wide rows into bucketed partitions whose boundary seeds the thin
-    # pass never built (the round-6 review find). The canonical type is
-    # the union-promoted key type, the one the wide pass carries.
-    key_type = (
-        left.select(F.col(on).alias("_k"))
-        .unionByName(right.select(F.col(on).alias("_k")))
-        .schema["_k"]
-        .dataType
-    )
-    hb_of = lambda c: F.pmod(  # noqa: E731
-        F.xxhash64(c.cast(key_type), F.lit(41)), F.lit(detection_buckets)
-    )
-    # control-plane collect: <= detection_buckets ids, usually zero (the
-    # exact-quantiles / IVF-centroid pattern — never data-sized)
-    heavy_ids = [
-        r["_hb"]
-        for r in (
-            left.select(hb_of(F.col(on)).alias("_hb"))
-            .unionByName(right.select(hb_of(F.col(on)).alias("_hb")))
-            .groupBy("_hb")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > F.lit(heavy_threshold))
-            .select("_hb")
-            .collect()
+    b_rows = (
+        summary.select(
+            "_k", "_bk", F.last("_pb", ignorenulls=True).over(carry_w).alias("_p")
         )
-    ]
-    if not heavy_ids:
-        # uniform keyspace: hand back plain asof_join's plan VERBATIM —
-        # the one-exchange pipeline with zero routing residue
-        return asof_join(
-            left, right, on=on, left_time=left_time,
-            right_time=right_time, payload=payload, direction=direction,
-            right_tiebreak=right_tiebreak,
+        .filter(F.col("_p").isNotNull())
+        .select(
+            "_k", F.lit(float("-inf")).alias("_s"), "_bk",
+            F.lit(-1).alias("_m"), *null_lc, "_p", *tb_null,
         )
-    # literal predicate (Catalyst converts long isin lists to an O(1)
-    # InSet above the conversion threshold); no broadcast join anywhere
-    is_heavy = lambda c: hb_of(c).isin(heavy_ids)  # noqa: E731
-
-    l_s = (_seconds(left, left_time) * sign).alias("_s")
-    r_s = (_seconds(right, right_time) * sign).alias("_s")
-    tb_type = right.schema[right_tiebreak].dataType if right_tiebreak else None
-    p_expr = F.struct(
-        *[F.col(src).alias(dst) for src, dst in payload.items()]
-    )
-    tb_r = [F.col(right_tiebreak).alias("_tb")] if right_tiebreak else []
-    tb_null = (
-        [F.lit(None).cast(tb_type).alias("_tb")] if right_tiebreak else []
     )
 
-    # ---- thin boundary pre-pass over HEAVY rows only -------------------
-    # same summary/boundary machinery as asof_join_bucketed, but the
-    # heavy-bucket filter makes the aggregate genuinely compact
-    r_thin = (
-        right.select(
-            F.col(on).alias("_k"), r_s, F.lit(0).alias("_m"),
-            p_expr.alias("_p"), *tb_r,
-        )
-        .filter(is_heavy(F.col("_k")))
-        .withColumn("_bk", bucket_of(F.col("_s")))
-    )
-    p_type = r_thin.schema["_p"].dataType
-    l_thin = (
-        left.select(
-            F.col(on).alias("_k"), l_s, F.lit(1).alias("_m"),
-            F.lit(None).cast(p_type).alias("_p"), *tb_null,
-        )
-        .filter(is_heavy(F.col("_k")))
-        .withColumn("_bk", bucket_of(F.col("_s")))
-    )
-    ord_fields = [(F.lit(1) - F.col("_m")).alias("r"), F.col("_s").alias("s")]
-    if right_tiebreak:
-        ord_fields.append(F.col("_tb").alias("t"))
-    summary = (
-        l_thin.unionByName(r_thin)
-        .groupBy("_k", "_bk")
-        .agg(F.max_by("_p", F.struct(*ord_fields)).alias("_pb"))
-    )
-    carry_w = (
-        Window.partitionBy("_k")
-        .orderBy("_bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    boundary = summary.select(
-        "_k",
-        "_bk",
-        F.last("_pb", ignorenulls=True).over(carry_w).alias("_p"),
-    ).filter(F.col("_p").isNotNull())
-
-    # ---- wide pass: one union, one flag join, one exchange -------------
-    null_lc = [
-        F.lit(None).cast(left.schema[c].dataType).alias(f"_lc_{c}")
-        for c in carry_cols
-    ]
-    # boundary seeds are heavy by construction; -inf sorts before every
-    # real time in both directions' orderings (see docstring)
-    b_rows = boundary.select(
-        "_k", F.lit(float("-inf")).alias("_s"), "_bk",
-        F.lit(-1).alias("_m"), *null_lc, "_p", *tb_null,
-    )
-    r_rows = right.select(
-        F.col(on).alias("_k"), r_s, F.lit(0).alias("_m"), *null_lc,
-        p_expr.alias("_p"), *tb_r,
-    )
-    l_rows = left.select(
-        F.col(on).alias("_k"), l_s, F.lit(1).alias("_m"),
-        *[F.col(c).alias(f"_lc_{c}") for c in carry_cols],
-        F.lit(None).cast(p_type).alias("_p"), *tb_null,
-    )
-    # routing is a map-side literal predicate — no join, no broadcast
-    wide = l_rows.unionByName(r_rows)
-    flagged = wide.withColumn(
-        "_bk",
-        F.when(is_heavy(F.col("_k")), bucket_of(F.col("_s")))
-        .otherwise(F.lit(0).cast("long")),
-    ).unionByName(b_rows)
-    # light partitions mix NULL and real times, so the NULL placement
-    # must match plain's traversal: first going backward (asc), last
-    # going forward (desc on unnegated time); heavy partitions hold no
-    # NULL _s except in the sentinel bucket, where rows tie and _m
-    # orders boundary < right < left as always
+    # WIDE pass: route by the map-side predicate, union the seeds in,
+    # one exchange on (key, effective bucket). Marker order within a
+    # partition: seed(-1), then right(0) before left(1) at equal times.
+    bk = bucket_of(F.col("_s"))
+    if is_heavy is not None:
+        bk = F.when(is_heavy(F.col("_k")), bk).otherwise(F.lit(0).cast("long"))
     s_order = (
         F.col("_s").asc_nulls_first()
         if direction == "backward"
         else F.col("_s").asc_nulls_last()
     )
-    order_cols = [s_order, F.col("_m")] + (
-        [F.col("_tb").asc_nulls_first()] if right_tiebreak else []
-    )
     w = (
         Window.partitionBy("_k", "_bk")
-        .orderBy(*order_cols)
+        .orderBy(
+            s_order, F.col("_m"),
+            *([F.col("_tb").asc_nulls_first()] if right_tiebreak else []),
+        )
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    carried = flagged.select(
+    carried = wide.withColumn("_bk", bk).unionByName(b_rows).select(
         "_m",
         "_k",
         *[f"_lc_{c}" for c in carry_cols],
@@ -699,7 +471,7 @@ def trailing_window_features(
     as for every per-key window (one task per key — see the module
     docstring); for hot-key-safe trailing aggregates over a KNOWN grid,
     pre-bucket to (key, time_bucket) counts first and window the bucket
-    summaries (the asof_join_adaptive pattern).
+    summaries (the ``asof_join(bucket_seconds=...)`` pattern).
 
     Rows with NULL time are EXCLUDED (a NULL has no trailing window;
     keeping them would put engine-specific NULL-ordering semantics in

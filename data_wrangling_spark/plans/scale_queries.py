@@ -26,14 +26,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _table_disk_bytes(sf_dir: str, name: str) -> int:
+def _table_disk_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk parquet size of a table (file or directory) — the cheap,
-    estimator-independent input for size-gating a broadcast HINT. A
-    hint overrides every Catalyst/AQE threshold, so any hinted relation
-    must be provably small from ACTUAL data, not from the join-output
-    size estimates the hint exists to correct. Filesystem metadata
-    only; no Spark job. Non-local/missing paths return 2**62 (gate
-    shut — fall back to the adaptive plan)."""
+    estimator-independent input for size-gating a join HINT. A hint
+    overrides every Catalyst/AQE threshold, so any hinted relation must
+    be provably sized from ACTUAL data, not from the join-output size
+    estimates the hint exists to correct. Filesystem metadata only; no
+    Spark job. Non-local/missing paths return None, and every gate
+    treats None as "no hint" (fail closed — the adaptive plan)."""
     import os
 
     p = os.path.join(sf_dir, f"{name}.parquet")
@@ -45,7 +45,7 @@ def _table_disk_bytes(sf_dir: str, name: str) -> int:
             for root, _dirs, files in os.walk(p)
             for f in files
         )
-    return 2**62
+    return None
 
 
 #: revenue in exact integer cents — ONE definition for every lineitem
@@ -126,7 +126,8 @@ def ext_tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame
         "folds the dedup into the carry window's sort instead of a "
         "groupBy pre-pass — the whole query is ONE hash shuffle on the "
         "key, no range cross-product, no aggregate exchange "
-        "(operators/temporal.py). Oracle uses DuckDB's native ASOF LEFT "
+        "(operators/temporal.py asof_join with the default "
+        "bucket_seconds=None). Oracle uses DuckDB's native ASOF LEFT "
         "JOIN over the max-orderkey dedup, which is equivalent.",
     bench=True,
 )
@@ -198,25 +199,27 @@ def ext_asof_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
           ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
         ORDER BY e.event_id
     """,
-    doc="ext_asof_latest_order through the SKEW-SAFE bucketed form: same "
+    doc="ext_asof_latest_order with EVERY key bucketed — "
+        "asof_join(bucket_seconds=weekly, heavy_threshold=0): same "
         "result (same oracle), but the carry window partitions on "
         "(user, weekly time bucket) instead of user alone, so a hot "
         "key's rows spread across its buckets and only one pre-"
         "aggregated payload row per (key, bucket) crosses boundaries — "
         "the mitigation for the one skew shape AQE cannot split "
-        "(window partitions). operators/temporal.py asof_join_bucketed.",
+        "(window partitions). Lazy: no detection job runs. "
+        "operators/temporal.py asof_join.",
 )
 def ext_asof_latest_order_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_wrangling_spark.operators.temporal import asof_join_bucketed
+    from data_wrangling_spark.operators.temporal import asof_join
 
     events = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"), "o_orderdate", "o_orderkey"
     )
-    return asof_join_bucketed(
+    return asof_join(
         events, orders, on="user_id", left_time="ts", right_time="o_orderdate",
         payload={"o_orderkey": "last_orderkey"}, bucket_seconds=7 * 86400,
-        right_tiebreak="o_orderkey",
+        right_tiebreak="o_orderkey", heavy_threshold=0,
     )
 
 
@@ -233,32 +236,33 @@ def ext_asof_latest_order_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
           ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
         ORDER BY e.event_id
     """,
-    doc="ext_asof_latest_order through the ADAPTIVE form — the "
-        "recommended default at scale: one hash-bucket counting job "
+    doc="ext_asof_latest_order through the ADAPTIVE skew policy — "
+        "asof_join(bucket_seconds=weekly, heavy_threshold=50k), the "
+        "recommended form at scale: one hash-bucket counting job "
         "(bucket cardinality caps the partial-agg output per task, so "
         "the detection shuffle is O(buckets) at any data size) collects "
         "the heavy-bucket ids as control-plane rows, and ONE carry "
         "window runs on (key, weekly bucket) for keys in those buckets "
         "— routed by a literal isin predicate, no broadcast join — and "
         "(key, 0) for everything else. With no heavy bucket the "
-        "returned plan IS plain asof_join's verbatim (plan-pinned), so "
+        "returned plan IS the plain form's verbatim (plan-pinned), so "
         "the uniform-key cost over plain is exactly the detection job "
-        "(r7: 1.21x at 20x, ~1.0x at 100x; the earlier lazy/AQE-"
-        "erasure form left ~0.6s of inert machinery). Same oracle as "
-        "the plain/bucketed forms (result-identical by construction). "
+        "(1.21x at 20x, ~1.0x at 100x; a lazy AQE-erasure form "
+        "left ~0.6s of inert machinery). Same oracle as the plain and "
+        "all-bucketed forms (result-identical by construction). "
         "heavy_threshold (50k) and detection_buckets (4096) are "
         "bench-sized the same way SCALING.md's skew section shrinks "
         "the AQE thresholds to GB scale. "
-        "operators/temporal.py asof_join_adaptive.",
+        "operators/temporal.py asof_join.",
 )
 def ext_asof_latest_order_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_wrangling_spark.operators.temporal import asof_join_adaptive
+    from data_wrangling_spark.operators.temporal import asof_join
 
     events = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"), "o_orderdate", "o_orderkey"
     )
-    return asof_join_adaptive(
+    return asof_join(
         events, orders, on="user_id", left_time="ts", right_time="o_orderdate",
         payload={"o_orderkey": "last_orderkey"}, bucket_seconds=7 * 86400,
         right_tiebreak="o_orderkey", heavy_threshold=50_000,
@@ -2902,9 +2906,10 @@ def ext_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # size-gate: hint only while supplier is provably broadcast-sized
     # on disk; past the gate the plan stays adaptive (see docstring)
+    supp_bytes = _table_disk_bytes(sf_dir, "supplier")
     supp_hinted = (
         F.broadcast(supp)
-        if _table_disk_bytes(sf_dir, "supplier") < (64 << 20)
+        if supp_bytes is not None and supp_bytes < (64 << 20)
         else supp
     )
     return (
@@ -3724,7 +3729,8 @@ def ext_tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFra
     # partition size while the hash build is the smaller projection
     # (the q21 rework measured the same sort removal at -45% where the
     # sort was the wall).
-    if _table_disk_bytes(sf_dir, "orders") >= (32 << 20):
+    orders_bytes = _table_disk_bytes(sf_dir, "orders")
+    if orders_bytes is not None and orders_bytes >= (32 << 20):
         orders = orders.hint("shuffle_hash")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -4124,7 +4130,8 @@ def ext_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
     # inputs (sf0.1: 2.6 MB orders) the F-orders projection broadcasts
     # for free — only hint once orders is provably past broadcast size
     # on disk, where the unhinted plan degrades to the sorted SMJ.
-    if _table_disk_bytes(sf_dir, "orders") >= (32 << 20):
+    orders_bytes = _table_disk_bytes(sf_dir, "orders")
+    if orders_bytes is not None and orders_bytes >= (32 << 20):
         orders = orders.hint("shuffle_hash")
     lo = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)

@@ -1338,11 +1338,13 @@ SKEW_HANDLED_BY = {
                              "the key's rows, the documented bound "
                              "(operators/temporal.py skew note); the "
                              "bucketed row below is the mitigation",
-    "ext_asof_latest_order_bucketed": "asof_join_bucketed: carry window on "
+    "ext_asof_latest_order_bucketed": "asof_join(bucket_seconds=weekly, "
+                                      "heavy_threshold=0): carry window on "
                                       "(key, weekly bucket) — the hot key's "
                                       "rows spread across its time buckets; "
                                       "result-identical to the plain form",
-    "ext_asof_latest_order_adaptive": "asof_join_adaptive: one hash-bucket "
+    "ext_asof_latest_order_adaptive": "asof_join(bucket_seconds=weekly, "
+                                      "heavy_threshold=50k): one hash-bucket "
                                       "counting job flags heavy keys, then "
                                       "ONE carry window runs on (key, "
                                       "weekly bucket) for those keys and "

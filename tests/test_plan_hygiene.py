@@ -462,3 +462,32 @@ def test_sequence_pack_plan_is_distributed(spark):
     assert all(len(g) == 3 for g in windows), (
         f"cumsum window lost its partition spec: {windows}"
     )
+
+
+def test_size_gates_fail_closed_when_size_unknown(spark, monkeypatch):
+    """A table size the gates cannot measure (a non-local ``file://``
+    sf_dir) means NO hint: q21's and q9's shuffle_hash gates stay shut,
+    and so does q7's supplier broadcast gate. Faking a measured 64 MB
+    orders table opens the q21/q9 gates, so the check is not vacuous."""
+    from data_wrangling_spark.plans import scale_queries
+
+    unknown = "file://" + SF_DIR
+    assert scale_queries._table_disk_bytes(unknown, "orders") is None
+
+    def optimized(name, sf_dir):
+        df = QUERIES[name].spark(spark, sf_dir)
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    gated = ("ext_tpch_q21_waiting_suppliers", "ext_tpch_q9_product_type_profit")
+    for name in gated:
+        assert "shuffle_hash" not in optimized(name, unknown), name
+    supp_joins = [
+        line
+        for line in optimized("ext_tpch_q7_volume_shipping", unknown).splitlines()
+        if "Join" in line and "l_suppkey" in line and "s_suppkey" in line
+    ]
+    assert supp_joins and not any("strategy=broadcast" in j for j in supp_joins)
+
+    monkeypatch.setattr(scale_queries, "_table_disk_bytes", lambda *_: 64 << 20)
+    for name in gated:
+        assert "shuffle_hash" in optimized(name, SF_DIR), name

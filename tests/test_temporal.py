@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from data_wrangling_spark.operators.temporal import asof_join, sessionize
 
 
@@ -161,15 +163,11 @@ def _rows(df):
 
 
 def test_asof_bucketed_equals_plain_backward(spark):
-    """asof_join_bucketed must return EXACTLY asof_join's rows across
-    bucket widths that force payload carries over empty/boundary
-    buckets (1-minute buckets over a 10-hour span) and widths larger
-    than the whole span (single bucket == the plain op)."""
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_bucketed,
-    )
-
+    """Every key bucketed (heavy_threshold=0) must return EXACTLY the
+    plain asof_join's rows across bucket widths that force payload
+    carries over empty/boundary buckets (1-minute buckets over a 10-hour
+    span) and widths larger than the whole span (single bucket == the
+    plain op)."""
     ldf, rdf = _random_asof_frames(spark, seed=7)
     want = _rows(
         asof_join(ldf, rdf, on="k", left_time="t", right_time="rt",
@@ -177,9 +175,9 @@ def test_asof_bucketed_equals_plain_backward(spark):
     )
     for width in (60, 3600, 10**9):
         got = _rows(
-            asof_join_bucketed(
+            asof_join(
                 ldf, rdf, on="k", left_time="t", right_time="rt",
-                payload={"payload": "p"}, bucket_seconds=width,
+                payload={"payload": "p"}, bucket_seconds=width, heavy_threshold=0,
                 right_tiebreak="payload",
             )
         )
@@ -187,11 +185,6 @@ def test_asof_bucketed_equals_plain_backward(spark):
 
 
 def test_asof_bucketed_equals_plain_forward(spark):
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_bucketed,
-    )
-
     ldf, rdf = _random_asof_frames(spark, seed=11)
     want = _rows(
         asof_join(ldf, rdf, on="k", left_time="t", right_time="rt",
@@ -200,9 +193,9 @@ def test_asof_bucketed_equals_plain_forward(spark):
     )
     for width in (60, 7200):
         got = _rows(
-            asof_join_bucketed(
+            asof_join(
                 ldf, rdf, on="k", left_time="t", right_time="rt",
-                payload={"payload": "p"}, bucket_seconds=width,
+                payload={"payload": "p"}, bucket_seconds=width, heavy_threshold=0,
                 direction="forward", right_tiebreak="payload",
             )
         )
@@ -214,11 +207,6 @@ def test_asof_bucketed_hot_key_partitions_by_bucket(spark):
     (key, bucket), so one hot key's rows do NOT form one partition.
     Plan must show both columns in the hash partitioning and the
     results must still match the plain op on a 90%-hot-key frame."""
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_bucketed,
-    )
-
     hot = [(i, "hot", _ts(i % 500)) for i in range(300)]
     cold = [(1000 + i, f"c{i}", _ts(i)) for i in range(30)]
     ldf = spark.createDataFrame(hot + cold, "event_id long, k string, t timestamp")
@@ -227,9 +215,9 @@ def test_asof_bucketed_hot_key_partitions_by_bucket(spark):
         + [(f"c{i}", _ts(0), 900 + i) for i in range(30)],
         "k string, rt timestamp, payload int",
     )
-    out = asof_join_bucketed(
+    out = asof_join(
         ldf, rdf, on="k", left_time="t", right_time="rt",
-        payload={"payload": "p"}, bucket_seconds=600,
+        payload={"payload": "p"}, bucket_seconds=600, heavy_threshold=0,
         right_tiebreak="payload",
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -246,16 +234,14 @@ def test_asof_bucketed_hot_key_partitions_by_bucket(spark):
 def test_asof_bucketed_rejects_bad_args(spark):
     import pytest
 
-    from data_wrangling_spark.operators.temporal import asof_join_bucketed
-
     ldf, rdf = _random_asof_frames(spark, seed=3, n_left=5, n_right=5)
     with pytest.raises(ValueError, match="direction"):
-        asof_join_bucketed(ldf, rdf, on="k", left_time="t", right_time="rt",
-                           payload={"payload": "p"}, bucket_seconds=60,
-                           direction="sideways")
+        asof_join(ldf, rdf, on="k", left_time="t", right_time="rt",
+                  payload={"payload": "p"}, bucket_seconds=60, heavy_threshold=0,
+                  direction="sideways")
     with pytest.raises(ValueError, match="bucket_seconds"):
-        asof_join_bucketed(ldf, rdf, on="k", left_time="t", right_time="rt",
-                           payload={"payload": "p"}, bucket_seconds=0)
+        asof_join(ldf, rdf, on="k", left_time="t", right_time="rt",
+                  payload={"payload": "p"}, bucket_seconds=0, heavy_threshold=0)
 
 
 def test_asof_bucketed_null_times_match_plain_both_directions(spark):
@@ -267,11 +253,6 @@ def test_asof_bucketed_null_times_match_plain_both_directions(spark):
     sentinel bucket (round-5 review find: SQL's single NULL group
     sorts first under both orderings, which silently diverged
     forward)."""
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_bucketed,
-    )
-
     left = spark.createDataFrame(
         [(1, "a", _ts(10)), (2, "a", _ts(300)), (3, "a", None),
          (4, "b", _ts(50)), (5, "b", None)],
@@ -290,9 +271,9 @@ def test_asof_bucketed_null_times_match_plain_both_directions(spark):
         )
         for width in (60, 10**7):
             got = _rows(
-                asof_join_bucketed(
+                asof_join(
                     left, right, on="k", left_time="t", right_time="rt",
-                    payload={"payload": "p"}, bucket_seconds=width,
+                    payload={"payload": "p"}, bucket_seconds=width, heavy_threshold=0,
                     direction=direction, right_tiebreak="payload",
                 )
             )
@@ -302,15 +283,10 @@ def test_asof_bucketed_null_times_match_plain_both_directions(spark):
 # ---------------------------------------------------------------- adaptive --
 
 def test_asof_adaptive_equals_plain_mixed_keys_both_directions(spark):
-    """asof_join_adaptive must be row-identical to asof_join when the
-    threshold splits the keyspace: heavy keys (above threshold) route
+    """The adaptive policy must be row-identical to plain asof_join when
+    the threshold splits the keyspace: heavy keys (above threshold) route
     through the bucketed path, the rest stay plain, and the union is
     exactly the plain result."""
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_adaptive,
-    )
-
     ldf, rdf = _random_asof_frames(spark, seed=19, n_left=300, n_keys=4)
     # n_left=300 over 4 keys -> ~75 left rows/key; threshold 60 makes
     # some (not all) keys heavy
@@ -321,7 +297,7 @@ def test_asof_adaptive_equals_plain_mixed_keys_both_directions(spark):
                       right_tiebreak="payload")
         )
         got = _rows(
-            asof_join_adaptive(
+            asof_join(
                 ldf, rdf, on="k", left_time="t", right_time="rt",
                 payload={"payload": "p"}, bucket_seconds=60,
                 direction=direction, right_tiebreak="payload",
@@ -333,18 +309,13 @@ def test_asof_adaptive_equals_plain_mixed_keys_both_directions(spark):
 
 def test_asof_adaptive_no_heavy_keys_collapses_to_plain_at_build(spark):
     """With every bucket under the threshold the eager O(buckets)
-    detection collect comes back empty and asof_join_adaptive returns
-    plain asof_join's plan VERBATIM — the optimized plans are string-
+    detection collect comes back empty and asof_join returns the
+    plain form's plan VERBATIM — the optimized plans are string-
     identical, so the uniform-key cost over plain is exactly the
     detection job (the lazy/AQE-erasure design left ~0.6s of inert
     machinery at 20x bench scale; see the operator docstring)."""
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_adaptive,
-    )
-
     ldf, rdf = _random_asof_frames(spark, seed=23, n_left=40, n_right=20)
-    out = asof_join_adaptive(
+    out = asof_join(
         ldf, rdf, on="k", left_time="t", right_time="rt",
         payload={"payload": "p"}, bucket_seconds=3600,
         right_tiebreak="payload", heavy_threshold=1_000_000,
@@ -370,10 +341,8 @@ def test_asof_adaptive_heavy_path_plan_is_join_free(spark):
     predicate and the boundary seeds union in — the optimized plan must
     contain no join of any kind (the pre-round-7 form carried a
     broadcast flag join on every wide row)."""
-    from data_wrangling_spark.operators.temporal import asof_join_adaptive
-
     ldf, rdf = _random_asof_frames(spark, seed=23, n_left=120, n_keys=3)
-    out = asof_join_adaptive(
+    out = asof_join(
         ldf, rdf, on="k", left_time="t", right_time="rt",
         payload={"payload": "p"}, bucket_seconds=60,
         right_tiebreak="payload", heavy_threshold=10,
@@ -389,11 +358,6 @@ def test_asof_adaptive_heavy_null_key_routes_with_its_partition(spark):
     key must route with its partition — detection hashes the key, and
     xxhash64(NULL) is a real bucket, so no null-safe join machinery is
     involved anywhere."""
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_adaptive,
-    )
-
     left = spark.createDataFrame(
         [(i, None, _ts(i)) for i in range(50)]
         + [(100 + i, "cold", _ts(i)) for i in range(5)],
@@ -408,7 +372,7 @@ def test_asof_adaptive_heavy_null_key_routes_with_its_partition(spark):
                   payload={"payload": "p"}, right_tiebreak="payload")
     )
     got = _rows(
-        asof_join_adaptive(
+        asof_join(
             left, right, on="k", left_time="t", right_time="rt",
             payload={"payload": "p"}, bucket_seconds=10,
             right_tiebreak="payload", heavy_threshold=20,
@@ -422,17 +386,15 @@ def test_asof_adaptive_heavy_null_key_routes_with_its_partition(spark):
 def test_asof_adaptive_rejects_bad_threshold(spark):
     import pytest
 
-    from data_wrangling_spark.operators.temporal import asof_join_adaptive
-
     ldf, rdf = _random_asof_frames(spark, seed=3, n_left=5, n_right=5)
     with pytest.raises(ValueError, match="heavy_threshold"):
-        asof_join_adaptive(ldf, rdf, on="k", left_time="t", right_time="rt",
-                           payload={"payload": "p"}, bucket_seconds=60,
-                           heavy_threshold=0)
+        asof_join(ldf, rdf, on="k", left_time="t", right_time="rt",
+                  payload={"payload": "p"}, bucket_seconds=60,
+                  heavy_threshold=-1)
     with pytest.raises(ValueError, match="detection_buckets"):
-        asof_join_adaptive(ldf, rdf, on="k", left_time="t", right_time="rt",
-                           payload={"payload": "p"}, bucket_seconds=60,
-                           detection_buckets=0)
+        asof_join(ldf, rdf, on="k", left_time="t", right_time="rt",
+                  payload={"payload": "p"}, bucket_seconds=60,
+                  detection_buckets=0)
 
 
 def test_asof_adaptive_bucket_false_positives_are_result_identical(spark):
@@ -441,11 +403,6 @@ def test_asof_adaptive_bucket_false_positives_are_result_identical(spark):
     — routes through the bucketed-window path as a false positive. The
     result must still be exactly plain asof_join's (routing is a
     partitioning decision, never a semantics decision)."""
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_adaptive,
-    )
-
     ldf, rdf = _random_asof_frames(spark, seed=31, n_left=120, n_keys=5)
     for direction in ("backward", "forward"):
         want = _rows(
@@ -454,7 +411,7 @@ def test_asof_adaptive_bucket_false_positives_are_result_identical(spark):
                       right_tiebreak="payload")
         )
         got = _rows(
-            asof_join_adaptive(
+            asof_join(
                 ldf, rdf, on="k", left_time="t", right_time="rt",
                 payload={"payload": "p"}, bucket_seconds=60,
                 direction=direction, right_tiebreak="payload",
@@ -469,11 +426,6 @@ def test_asof_bucketed_null_key_cross_bucket_carry(spark):
     equality, so a NULL key — one partition to the window, same as
     plain asof_join — lost every cross-bucket payload carry and later
     buckets' left rows got NULL instead of the carried payload."""
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_bucketed,
-    )
-
     left = spark.createDataFrame(
         [(i, None, _ts(i)) for i in range(0, 50, 7)],
         "event_id long, k string, t timestamp",
@@ -489,13 +441,97 @@ def test_asof_bucketed_null_key_cross_bucket_carry(spark):
                       right_tiebreak="payload")
         )
         got = _rows(
-            asof_join_bucketed(
+            asof_join(
                 left, right, on="k", left_time="t", right_time="rt",
-                payload={"payload": "p"}, bucket_seconds=10,
+                payload={"payload": "p"}, bucket_seconds=10, heavy_threshold=0,
                 direction=direction, right_tiebreak="payload",
             )
         )
         assert got == want, direction
+
+
+# ------------------------------------------------- pandas merge_asof ref --
+
+#: the three skew modes of asof_join: plain, every key bucketed, and a
+#: threshold that splits the skewed keyspace below into heavy and light
+_ASOF_MODES = {
+    "plain": {},
+    "all_bucketed": {"bucket_seconds": 60, "heavy_threshold": 0},
+    "split": {"bucket_seconds": 60, "heavy_threshold": 80},
+}
+
+
+@pytest.mark.parametrize("mode", sorted(_ASOF_MODES))
+def test_asof_matches_pandas_merge_asof(spark, mode):
+    """A DuckDB-independent reference: every mode of asof_join equals
+    ``pd.merge_asof`` on tiny frames, in both directions, with exact
+    left/right and right/right time ties, with and without
+    ``right_tiebreak`` (pandas sees the right side pre-deduplicated to
+    the max tiebreak per (key, time); without a tiebreak both engines
+    get that deduplicated side). One hot key holds ~60% of the rows, so
+    the "split" threshold makes it heavy and leaves the cold keys
+    light. NULL keys/times stay covered by the equivalence tests above:
+    merge_asof rejects nulls in its ``on``/``by`` columns."""
+    import random
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    rng = random.Random(43)
+    keys = ["hot"] * 6 + [f"c{i}" for i in range(4)]
+    ldf = spark.createDataFrame(
+        [(i, rng.choice(keys), _ts(rng.randrange(0, 120))) for i in range(200)],
+        "event_id long, k string, t timestamp",
+    )
+    rdf = spark.createDataFrame(
+        [(rng.choice(keys), _ts(rng.randrange(0, 120)), 1000 + i)
+         for i in range(80)],
+        "k string, rt timestamp, payload int",
+    )
+    lp, rp = ldf.toPandas(), rdf.toPandas()
+    # the frames really carry the ties and the skew this test is about
+    assert rp.duplicated(["k", "rt"]).any()
+    assert lp.merge(rp, left_on=["k", "t"], right_on=["k", "rt"]).shape[0] > 0
+    per_key = pd.concat([lp.k, rp.k]).value_counts()
+    assert per_key["hot"] > 80 > per_key.drop("hot").max()
+
+    rp_dedup = rp.sort_values("payload").drop_duplicates(["k", "rt"], keep="last")
+    rdf_dedup = rdf.groupBy("k", "rt").agg(F.max("payload").alias("payload"))
+    for direction in ("backward", "forward"):
+        ref = pd.merge_asof(
+            lp.sort_values("t"), rp_dedup.sort_values("rt"),
+            left_on="t", right_on="rt", by="k", direction=direction,
+        )
+        want = sorted(
+            (r.event_id, None if pd.isna(r.payload) else int(r.payload))
+            for r in ref.itertuples()
+        )
+        for right, tiebreak in ((rdf, "payload"), (rdf_dedup, None)):
+            out = asof_join(
+                ldf, right, on="k", left_time="t", right_time="rt",
+                payload={"payload": "p"}, direction=direction,
+                right_tiebreak=tiebreak, **_ASOF_MODES[mode],
+            )
+            got = sorted((r.event_id, r.p) for r in out.collect())
+            assert got == want, (direction, tiebreak)
+
+
+def test_asof_latest_order_plan_one_exchange_one_window(spark):
+    """The benchmarked as-of query (plain mode) plans exactly one hash
+    Exchange and one Window over the union of both sides — no Join, no
+    aggregate exchange for the tiebreak dedup."""
+    import re
+
+    from data_wrangling_spark.plans.registry import QUERIES, queries
+    from tests.conftest import SF_DIR
+
+    queries()
+    df = QUERIES["ext_asof_latest_order"].spark(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = re.findall(r"^[\s:+\-]*(?:\*\(\d+\) )?(\w+)", plan, re.M)
+    assert nodes.count("Exchange") == 1, plan
+    assert nodes.count("Window") == 1, plan
+    assert not [n for n in nodes if "Join" in n], plan
 
 
 # ------------------------------------------------------- trailing window --
@@ -575,11 +611,6 @@ def test_asof_adaptive_mixed_key_dtypes_heavy_key_carries(spark):
     with no right rows: each must still receive the carried payload."""
     import datetime as dt
 
-    from data_wrangling_spark.operators.temporal import (
-        asof_join,
-        asof_join_adaptive,
-    )
-
     base = dt.datetime(2024, 1, 1)
     left = spark.createDataFrame(
         [(i, 7, base + dt.timedelta(hours=6 * i)) for i in range(60)],
@@ -597,7 +628,7 @@ def test_asof_adaptive_mixed_key_dtypes_heavy_key_carries(spark):
     # has carries, so a broken boundary path cannot pass by vacuity
     assert sum(1 for r in want if r[-1] is not None) >= 59
     got = _rows(
-        asof_join_adaptive(
+        asof_join(
             left, right, on="k", left_time="t", right_time="rt",
             payload={"payload": "p"}, bucket_seconds=86400,
             right_tiebreak="payload", heavy_threshold=10,
