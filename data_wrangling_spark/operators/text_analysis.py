@@ -305,7 +305,8 @@ def boilerplate_spans(
     (df >= min_docs) → rebuild span STRINGS only from the
     representative documents (a left_semi on doc ids, ~|candidates|
     docs, never the corpus) → exact top-k on (n_docs desc, span).
-    Round-7 A/B at 100x (scripts/bench_boilerplate_ab.py): the earlier
+    Round-7 A/B at 100x (scripts/bench_boilerplate_ab.py at a293a75):
+    the earlier
     string-domain aggregate built 26M 3-gram strings that compact to
     27k distinct spans and the aggregate keyed on those strings —
     23.8s vs 16.7s hashed, identical top-20. No pairwise comparison
@@ -636,8 +637,8 @@ def token_entropy(
     against its shift, and n / distinct / Σ round(1e6·c·ln c) all fall
     out of one codegen-adjacent projection. At any cluster size the
     operator is a single map-only pass over the corpus (100x probe:
-    2.87s shipped → 2.02s, `scripts/bench_entropy_ab.py`, value-
-    identity asserted; the (doc, long) hashdom rework measured WORSE
+    2.87s shipped → 2.02s, `scripts/bench_entropy_ab.py` at `a293a75`,
+    value-identity asserted; the (doc, long) hashdom rework measured WORSE
     at 3.96s — the win is removing the exchanges, not narrowing them).
 
     Hash-collision caveat (the accepted lm_score/boilerplate pattern):
@@ -1197,8 +1198,8 @@ def dsir_importance(
     ``persist_tokens=True`` caches the tokenized (id, is_target,
     bucket) projection (MEMORY_AND_DISK) so pass 2 reads it back
     instead of re-running scan + tokenize + explode + md5: measured
-    23.9s -> 16.1s at 100x (scripts/bench_dsir_ab.py, fresh JVM,
-    value-hash parity checked) — DSIR's per-pass compute is costly
+    23.9s -> 16.1s at 100x (scripts/bench_dsir_ab.py at a293a75, fresh
+    JVM, value-hash parity checked) — DSIR's per-pass compute is costly
     enough to FLIP the vec_outliers round-10 verdict that caching an
     exploded corpus projection loses to recompute. One-shot scoring
     jobs (the production shape) should enable it; the default stays

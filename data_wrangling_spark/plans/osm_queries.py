@@ -213,7 +213,8 @@ def _normalize_counts_oracle() -> str:
         "persisted raw, no table materialization (round 13; the "
         "former parse→persist→5-count-jobs shape measured 15.95s at "
         "100x vs 8.0s for the bare parse noop — this form runs AT the "
-        "parse floor, scripts/bench_osmnorm_ab.py; equivalence to the "
+        "parse floor, scripts/bench_osmnorm_ab.py at a293a75; "
+        "equivalence to the "
         "materializing count union is asserted against both fixtures "
         "and the 100x file, and normalize_counts' docstring derives "
         "why cleaning cannot change a count: every cleaner is "
@@ -225,7 +226,8 @@ def _normalize_counts_oracle() -> str:
         "pre-r13 rows, not a speedup of the materializing fan-out "
         "(which keeps oracle coverage at fixture scale via "
         "osm_pipeline_audit/quarantine and a bench-scale regression "
-        "canary in scripts/bench_osmnorm_ab.py's 'shipped' variant — "
+        "canary in the 'shipped' variant of scripts/bench_osmnorm_ab.py "
+        "at a293a75 — "
         "the pre-r13 persist+5-count materializing form). "
         "Falls back to the fixture at the driver dirs, "
         "where the VALUES oracle (counts derived arithmetically from "

@@ -352,7 +352,7 @@ def x_text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "upstream (the round-12 snapshot_diff find); dropped on BOTH "
         "engines (driver value-hash sorts rows, so the result is "
         "unchanged): 4.20s -> 2.94s solo at 100x "
-        "(scripts/bench_rolling_ab.py).",
+        "(scripts/bench_rolling_ab.py at a293a75).",
 )
 def ext_rolling_event_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.temporal import (
@@ -2862,7 +2862,8 @@ def x_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "The resulting plan is the measured two-fact floor — stage "
         "probes: li scan+filter 0.9s, orders SMJ customer 1.8s, "
         "li shuffle + merge + agg ~1.6s (SCALING.md q7 floor note). "
-        "Round-14 re-probe (verdict item 2, bench_q7_ab.py shj* "
+        "Round-14 re-probe (verdict item 2, "
+        "scripts/bench_q7_ab.py at a293a75, shj* "
         "variants): the 1996-1998 shipdate window IS in the lineitem "
         "PushedFilters (plans/r14 before dump — the suspected miss "
         "was unfounded), and SHUFFLE_HASH-hinting either or both "
@@ -2966,7 +2967,8 @@ def ext_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         "int cents and the ppm share is floor(a/b*1e6) of bit-identical "
         "IEEE doubles, so the driver hash is stable. Dims broadcast; "
         "the part/customer side joins are unhinted for AQE at scale. "
-        "Round-13 stage probe (scripts/bench_q8_ab.py, fresh-JVM "
+        "Round-13 stage probe (scripts/bench_q8_ab.py at a293a75, "
+        "fresh-JVM "
         "medians at 100x): full 3.86s == li-side scan+project 1.75s + "
         "orders-side filter+region-semi 2.04s; the li x orders SMJ "
         "stage alone reproduces the full wall (4.12s) and "
@@ -3047,7 +3049,8 @@ def ext_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "LEFT join + coalesce(0) recovers order-less customers, second "
         "tiny agg builds the histogram. Same result as the textbook "
         "outer-join-then-count formulation the oracle uses. Round-13 "
-        "stage probe (scripts/bench_q13_ab.py, 100x solo): the "
+        "stage probe (scripts/bench_q13_ab.py at a293a75, 100x "
+        "solo): the "
         "per-custkey orders aggregate ALONE is 2.52s of the query's "
         "2.68s — a 15M-row, 1.5M-group hash aggregate, the "
         "engine-constant floor also documented on q4_top_users; "
@@ -3687,7 +3690,8 @@ def ext_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame
         "map-side partials. Round 14: that join is SHUFFLE_HASH-hinted "
         "past broadcast scale (size-gated on orders' disk bytes, the "
         "q21 pattern) — neither fact side is sorted; local A/B "
-        "marginal (2.56 vs 2.66s median at 100x, bench_q9_ab.py), "
+        "marginal (2.56 vs 2.66s median at 100x, "
+        "scripts/bench_q9_ab.py at a293a75), "
         "shipped on the sort-removal structural argument.",
 )
 def ext_tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3721,8 +3725,9 @@ def ext_tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFra
     # join (guide §3.1) — builds the 2-column orders projection per
     # partition and sorts NEITHER side. Same size-gate-from-below as
     # q21: only hint past broadcast scale, where the unhinted plan
-    # degrades to the sorted SMJ. Honest local A/B (bench_q9_ab.py,
-    # interleaved fresh-JVM pairs at 100x): 2/1/1 win/tie/loss,
+    # degrades to the sorted SMJ. Honest local A/B
+    # (scripts/bench_q9_ab.py at a293a75, interleaved fresh-JVM pairs
+    # at 100x): 2/1/1 win/tie/loss,
     # medians 2.56 vs 2.66s, pooled mins 2.37 vs 2.50 — a marginal
     # local win; shipped on the structural argument that the deleted
     # per-partition sorts are O(n log n) state that grows with
@@ -3777,7 +3782,7 @@ def ext_tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFra
         "enters the aggregate (5 regions, uniform suppliers): the "
         "catalog aggregate alone measured 4.62s full vs 2.15s pushed "
         "at 100x, full query 4.21s -> 2.24s solo "
-        "(scripts/bench_q11_ab.py, value-identity asserted).",
+        "(scripts/bench_q11_ab.py at a293a75, value-identity asserted).",
 )
 def ext_tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_asia = _region_suppliers(spark, sf_dir, "ASIA").select("s_suppkey")
@@ -4084,7 +4089,8 @@ def ext_tpch_q20_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> Dat
         "exactly as the reference's l1 multiplicity does. The oracle "
         "keeps the literal EXISTS form so DuckDB derives the answer "
         "independently; the supplier/nation/region chain broadcasts. "
-        "Round-12 stage probes (scripts/bench_q21_ab.py, fresh JVM "
+        "Round-12 stage probes (scripts/bench_q21_ab.py at a293a75, "
+        "fresh JVM "
         "per variant at 100x): li scan 0.43s + F-orders scan 0.25s; "
         "the li x F-orders SMJ ALONE measures 5.5s median — at the "
         "full query's own wall — and the groupBy(l_orderkey) "
@@ -4151,7 +4157,8 @@ def ext_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
     # this plans as a HashAggregate on the join's partitioning — with
     # the SMJ it planned as a SortAggregate and measured a wash (the
     # sorts were the cost, not the window buffers: see
-    # scripts/bench_q21_ab.py round-14 numbers — interleaved A/B
+    # the round-14 numbers of scripts/bench_q21_ab.py at a293a75 —
+    # interleaved A/B
     # window/agg/agg_shj 6.95/4.14/3.80s, pooled mins 4.33/3.98/3.66).
     late_s = F.when(F.col("_late"), F.col("l_suppkey"))
     per_order = (
@@ -4870,7 +4877,7 @@ def x_eval_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "registry, a coverage hole this row closes). Round 11: "
         "persist_tokens=True — pass 2 reads the cached tokenized "
         "projection instead of re-running explode+md5 (22.1s -> 13.3s "
-        "at 100x, scripts/bench_dsir_ab.py; value-hash parity "
+        "at 100x, scripts/bench_dsir_ab.py at a293a75; value-hash parity "
         "checked). The timing harness REBUILDS the plan and clears the "
         "cache per timed run (time_suite, fixed round 12 per the "
         "advisor: clearCache() also unregisters the persist, so the "
@@ -5104,7 +5111,8 @@ def x_vec_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "One lazy plan: per step a filtered user-keyed min(ts) hash "
         "aggregate joined to the shrinking survivor set; the lag window "
         "runs over O(steps) rows, never the event stream. Round-13 "
-        "probe (scripts/bench_funnel_ab.py, 100x solo): shipped 2.86s; "
+        "probe (scripts/bench_funnel_ab.py at a293a75, 100x solo): "
+        "shipped 2.86s; "
         "the step-1 aggregate ALONE is 1.30s (events scan 0.36s) and "
         "the three chained stages cannot beat ~2x that floor — fusing "
         "all steps onto one user-keyed exchange measured 2.64s (a "
@@ -5157,7 +5165,8 @@ def ext_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "weeks rows), and the first-event table is min(week) derived "
         "from it (date_trunc monotonic => value-identical); attach "
         "join + matrix aggregate read the cached set. 4.39s -> 2.26s "
-        "at 100x (scripts/bench_cohort_ab.py). No window over the "
+        "at 100x (scripts/bench_cohort_ab.py at a293a75). No window "
+        "over the "
         "event stream.",
 )
 def ext_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5337,7 +5346,8 @@ def ext_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "multiplies every shingle's df, and at 10x the dense shingles "
         "sit JUST under max_df=100 (worst case: maximal un-pruned "
         "fan-out) while at 20x+ they cross it and prune. Round-12 "
-        "stage probes (scripts/bench_incr_ab.py) dismantled the r11 "
+        "stage probes (scripts/bench_incr_ab.py at a293a75) "
+        "dismantled the r11 "
         "committed 36.0s/2.1x row: it was 2-task scan starvation "
         "(single-row-group bench layout, fixed by layout v2) stacked "
         "on the regexp failure-path cliff in normalized() (negated "

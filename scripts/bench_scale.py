@@ -76,6 +76,17 @@ DIM_TABLES = ["region", "nation", "part", "supplier"]
 LAYOUT_VERSION = 2
 
 
+def host_memory() -> tuple[str, str]:
+    """(Spark driver heap, DuckDB memory_limit) sized to this host's
+    physical RAM: 40% and 25% of it, so a JVM and a DuckDB connection in
+    one process tree still leave room for Python, off-heap buffers and
+    the page cache (15 GB host: 6g and 3GB). SPARK_GRAFT_DRIVER_MEM
+    overrides the heap."""
+    gib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") / 2**30
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, int(gib * 0.4))}g"
+    return heap, f"{max(1, int(gib * 0.25))}GB"
+
+
 def _path_bytes(path: str) -> int:
     """Total bytes of a parquet file or directory (fs metadata only)."""
     if os.path.isfile(path):
@@ -153,7 +164,8 @@ EXTRA_QUERIES = [
     "x_text_sequence_pack",
     # round-8 second batch (registered mid-round, AFTER the round's main
     # regeneration launched; their first multi-scale rows come from the
-    # same-methodology addendum run — scripts/bench_scale_addendum.py)
+    # same-methodology addendum run — scripts/bench_scale_addendum.py
+    # at a293a75)
     "x_eval_auc_quality",
     "x_eval_pr_sweep",
     "x_dedup_jaccard_prefix",
@@ -163,7 +175,7 @@ EXTRA_QUERIES = [
     # in, per the r8 verdict item-4 audit)
     "x_corpus_snapshot_diff",
     # round-9 addition: the collapse-then-prefix exact-Jaccard default
-    # (its duplicate-dense A/B lives in scripts/bench_jaccard_ab.py;
+    # (its duplicate-dense A/B is scripts/bench_jaccard_ab.py at a293a75;
     # this row times the registered query's corpus)
     "x_dedup_jaccard_collapsed",
     # round-10 additions: calibration reliability table + asymmetric
@@ -571,6 +583,7 @@ def semantic_scale_invariant(spark, sf_dir: str) -> dict:
 RERUN_RATIO = 1.5
 RERUN_MIN_ABS = 0.5    # seconds — don't chase noise on sub-second rows
 _WORKER_TAG = "EXTRAS_WORKER_JSON:"
+_ORACLE_TAG = "EXTRAS_WORKER_ORACLE:"
 
 
 def _extras_baseline_path() -> str:
@@ -578,36 +591,61 @@ def _extras_baseline_path() -> str:
                         "scaling_extras_baseline.json")
 
 
-def extras_worker(sf_dir: str, names: list[str]) -> None:
+def extras_worker(sf_dir: str, names: list[str],
+                  conf: dict[str, str] | None = None,
+                  oracle: bool = False) -> None:
     """Subprocess entry: time ``names`` at ``sf_dir`` in a fresh JVM
-    with the suite methodology and print one tagged JSON line."""
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    with the suite methodology (engine defaults plus ``conf``) and print
+    one tagged JSON line; with ``oracle``, also print each query's
+    verify_contract.oracle_status on a second tagged line."""
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", host_memory()[0])
     from data_wrangling_spark.plans.registry import QUERIES, _load_all
     from data_wrangling_spark.session import get_spark
 
     _load_all()
-    spark = get_spark(app_name="dws-extras-worker")
+    spark = get_spark(app_name="dws-extras-worker", extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     specs = {n: QUERIES[n] for n in names}
     timings, _ = time_suite(spark, specs, sf_dir, conc=False)
-    spark.stop()
     print(_WORKER_TAG + json.dumps(timings), flush=True)
+    if oracle:
+        from scripts.verify_contract import oracle_status
+
+        con = duckdb_connect(sf_dir)
+        status = {n: oracle_status(spark, con, QUERIES[n], sf_dir)
+                  for n in names}
+        con.close()
+        print(_ORACLE_TAG + json.dumps(status), flush=True)
+    spark.stop()
 
 
-def _spawn_extras_worker(sf_dir: str, names: list[str]) -> dict[str, float]:
+def _spawn_extras_worker(sf_dir: str, names: list[str],
+                         conf: dict[str, str] | None = None,
+                         oracle_out: dict | None = None) -> dict[str, float]:
+    """Run extras_worker in a fresh interpreter and JVM; return its
+    timings. Passing ``oracle_out`` asks the worker for the oracle
+    check and fills the dict with name -> status."""
     import subprocess
 
     cmd = [sys.executable, os.path.abspath(__file__),
-           "--extras-worker", sf_dir, *names]
+           "--extras-worker", sf_dir, *names,
+           *(f"--conf={k}={v}" for k, v in (conf or {}).items())]
+    if oracle_out is not None:
+        cmd.append("--oracle")
     proc = subprocess.run(cmd, capture_output=True, text=True)
     if proc.returncode != 0:
         print(proc.stderr[-4000:], file=sys.stderr)
         raise RuntimeError(f"extras worker failed for {names} at {sf_dir}")
+    timings = None
     for line in proc.stdout.splitlines():
         if line.startswith(_WORKER_TAG):
-            return json.loads(line[len(_WORKER_TAG):])
-    print(proc.stdout[-2000:], file=sys.stderr)
-    raise RuntimeError(f"extras worker emitted no JSON for {names}")
+            timings = json.loads(line[len(_WORKER_TAG):])
+        elif line.startswith(_ORACLE_TAG) and oracle_out is not None:
+            oracle_out.update(json.loads(line[len(_ORACLE_TAG):]))
+    if timings is None:
+        print(proc.stdout[-2000:], file=sys.stderr)
+        raise RuntimeError(f"extras worker emitted no JSON for {names}")
+    return timings
 
 
 #: a solo run (fresh JVM, idle box) must never LOSE to the shared-JVM
@@ -749,6 +787,30 @@ def run_extras_isolated(scales, duck_on: bool, cpus: int) -> dict:
     return out
 
 
+def duckdb_connect(sf_dir: str, threads: int | None = None):
+    """DuckDB connection with one view per table over ``sf_dir``'s
+    parquet (single file or multi-file directory), memory capped by
+    host_memory()."""
+    import duckdb
+
+    con = duckdb.connect()
+    if threads:
+        con.execute(f"SET threads={threads}")
+    # cap + spill: DuckDB's default memory_limit (~80% of RAM) plus the
+    # Spark JVM invited the kernel OOM killer on the heaviest scaled
+    # oracles (the round-7 regeneration died mid 20x extras); capped,
+    # they spill to disk instead
+    con.execute(f"SET memory_limit='{host_memory()[1]}'")
+    con.execute("SET temp_directory='/tmp/dws-duck-spill'")
+    for t in list(SHIFT_COLS) + DIM_TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        src = p if os.path.isfile(p) else os.path.join(p, "*.parquet")
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"
+        )
+    return con
+
+
 def duckdb_time_suite(
     specs, sf_dir: str, threads: int, sink: str = "fetch",
     skip: set[str] | None = None,
@@ -759,22 +821,7 @@ def duckdb_time_suite(
     the single-node engine-vs-engine comparison the round-4 verdict's
     stretch item asked for at sf1+, where Spark's ~0.12-0.15s per-job
     scheduling floor stops dominating."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(f"SET threads={threads}")
-    # cap + spill: DuckDB's default memory_limit (~80% of RAM) plus the
-    # 24g Spark JVM invited the kernel OOM killer on the heaviest scaled
-    # oracles (the round-7 regeneration died mid 20x extras); capped,
-    # they spill to disk instead
-    con.execute("SET memory_limit='40GB'")
-    con.execute("SET temp_directory='/tmp/dws-duck-spill'")
-    for t in list(SHIFT_COLS) + DIM_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        src = p if os.path.isfile(p) else os.path.join(p, "*.parquet")
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"
-        )
+    con = duckdb_connect(sf_dir, threads)
     timings: dict[str, float] = {}
 
     def _consume(sql: str) -> None:
@@ -850,8 +897,9 @@ def main() -> None:
     # the 100x point needs a real heap: Spark's 1g local-mode default
     # gives 32 task threads ~18 MB of execution memory each and the
     # large aggregates OOM (the first genuine cliff this script found —
-    # documented in SCALING.md). Overridable via SPARK_GRAFT_DRIVER_MEM.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # documented in SCALING.md). Sized from host RAM; overridable via
+    # SPARK_GRAFT_DRIVER_MEM.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", host_memory()[0])
     spark = get_spark(app_name="dws-bench-scale")
     spark.sparkContext.setLogLevel("ERROR")
     specs = bench_queries()
@@ -1136,8 +1184,9 @@ def write_scaling_md(path, mult, rows_by_mult, scales, results, conc_totals,
     a("task) — fine through 20x, exhausted at 100x. This is a deployment sizing")
     a("cliff, not a plan defect: every query's shape is unchanged, and the same")
     a("plans complete at 100x once the heap is sized to the machine")
-    a("(`SPARK_GRAFT_DRIVER_MEM`, default 24g in this script; on a real cluster")
-    a("this is spark-submit `--executor-memory`, never code). Spill-to-disk also")
+    a("(`SPARK_GRAFT_DRIVER_MEM`, default 40% of host RAM in this script; on a")
+    a("real cluster this is spark-submit `--executor-memory`, never code).")
+    a("Spill-to-disk also")
     a("needs execution memory headroom per task to hold its sort buffers — the")
     a("per-task floor is what the 1g heap violated.")
     a("")
@@ -1550,6 +1599,13 @@ def _xml_split_section(a) -> None:
 
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--extras-worker":
-        extras_worker(sys.argv[2], sys.argv[3:])
+        args = sys.argv[3:]
+        extras_worker(
+            sys.argv[2],
+            [a for a in args if not a.startswith("--")],
+            conf=dict(a[len("--conf="):].split("=", 1)
+                      for a in args if a.startswith("--conf=")),
+            oracle="--oracle" in args,
+        )
     else:
         main()

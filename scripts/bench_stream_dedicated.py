@@ -26,7 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def measure(mults: list[int]) -> dict:
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    from bench_scale import host_memory
+
     from data_wrangling_spark.session import get_spark
     from data_wrangling_spark.streaming.events import (
         dedup_stream,
@@ -35,6 +36,7 @@ def measure(mults: list[int]) -> dict:
         sessionize_stream_native,
     )
 
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", host_memory()[0])
     spark = get_spark(app_name="dws-stream-dedicated")
     spark.sparkContext.setLogLevel("ERROR")
     workdir = os.environ.get("SPARK_GRAFT_SCALE_WORKDIR", "/tmp/dws-scale")

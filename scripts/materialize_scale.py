@@ -17,9 +17,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     mults = [int(m) for m in sys.argv[1:]] or [10, 20, 100]
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     from data_wrangling_spark.session import get_spark
-    from scripts.bench_scale import materialize, materialize_osm, materialize_skewed
+    from scripts.bench_scale import (
+        host_memory,
+        materialize,
+        materialize_osm,
+        materialize_skewed,
+    )
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", host_memory()[0])
 
     spark = get_spark(app_name="dws-materialize-scale")
     spark.sparkContext.setLogLevel("ERROR")

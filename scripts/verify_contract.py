@@ -10,7 +10,7 @@ Usage:
     python scripts/verify_contract.py sf0.01 q1 q2    # subset
 
 Exit code 0 iff every checked query matches. Queries without an
-oracle are reported as rows-only (count printed, no compare).
+oracle are reported as rows-only (no compare).
 """
 
 from __future__ import annotations
@@ -21,12 +21,32 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 from data_wrangling_spark.plans.registry import QUERIES, _load_all  # noqa: E402
 from data_wrangling_spark.session import get_spark  # noqa: E402
-from data_wrangling_spark.sources.tables import TABLES  # noqa: E402
+from scripts.bench_scale import duckdb_connect  # noqa: E402
 from tests.conftest import canonical  # noqa: E402
+
+#: oracle_status results that count as passing
+GREEN = ("ok", "rows-only")
+
+
+def oracle_status(spark, con, spec, sf_dir: str) -> str:
+    """Run ``spec`` at ``sf_dir`` and its oracle in DuckDB ``con``;
+    compare canonical forms. Returns "ok", "rows-only" (no oracle),
+    "FAIL ..." or "ERROR ..."."""
+    try:
+        got = canonical(spec.spark(spark, sf_dir).toPandas())
+        if spec.oracle is None:
+            return "rows-only"
+        want = canonical(con.execute(spec.oracle).fetchdf())
+    except Exception as e:  # noqa: BLE001 — report and continue
+        return f"ERROR {type(e).__name__}: {e}"
+    if len(got) != len(want):
+        return f"FAIL rows spark={len(got)} duckdb={len(want)}"
+    mism = [(g, w) for g, w in zip(got, want) if g != w]
+    if mism:
+        return f"FAIL {len(mism)} rows; first: {mism[0]}"
+    return "ok"
 
 
 def main() -> int:
@@ -43,36 +63,14 @@ def main() -> int:
         return 2
 
     spark = get_spark(app_name="verify-contract")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_connect(sf_dir)
 
     failed = []
     for n in names:
-        spec = QUERIES[n]
         t0 = time.perf_counter()
-        try:
-            got = canonical(spec.spark(spark, sf_dir).toPandas())
-            if spec.oracle is None:
-                print(f"{n}: rows-only ({len(got)} rows)")
-                continue
-            want = canonical(con.execute(spec.oracle).fetchdf())
-            dt = time.perf_counter() - t0
-            if len(got) != len(want):
-                print(f"{n}: FAIL rows spark={len(got)} duckdb={len(want)}")
-                failed.append(n)
-            else:
-                mism = [(g, w) for g, w in zip(got, want) if g != w]
-                if mism:
-                    print(f"{n}: FAIL {len(mism)} rows; first: {mism[0]}")
-                    failed.append(n)
-                else:
-                    print(f"{n}: ok ({len(got)} rows, {dt:.1f}s)")
-        except Exception as e:  # noqa: BLE001 — report and continue
-            print(f"{n}: ERROR {type(e).__name__}: {e}")
+        status = oracle_status(spark, con, QUERIES[n], sf_dir)
+        print(f"{n}: {status} ({time.perf_counter() - t0:.1f}s)")
+        if status not in GREEN:
             failed.append(n)
     print(f"\n{len(names) - len(failed)}/{len(names)} green at {sf}")
     if failed:

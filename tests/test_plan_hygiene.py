@@ -491,3 +491,41 @@ def test_size_gates_fail_closed_when_size_unknown(spark, monkeypatch):
     monkeypatch.setattr(scale_queries, "_table_disk_bytes", lambda *_: 64 << 20)
     for name in gated:
         assert "shuffle_hash" in optimized(name, SF_DIR), name
+
+
+def test_scripts_fork_no_plans():
+    """Measurement scripts time the REGISTERED plans, never copies of
+    them: no ``scripts/*.py`` imports an underscore-prefixed name from
+    ``data_wrangling_spark`` (``registry._load_all`` excepted), neither
+    by ``from ... import _x`` nor as ``module._x`` on an imported
+    engine name. A variant that needs different code is a branch,
+    compared commit against commit."""
+    import ast
+    import pathlib
+
+    allowed = {("data_wrangling_spark.plans.registry", "_load_all")}
+    scripts = pathlib.Path(__file__).resolve().parent.parent / "scripts"
+    offenders = []
+    for path in sorted(scripts.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        engine_names = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).startswith("data_wrangling_spark"):
+                for a in node.names:
+                    if a.name.startswith("_") and (node.module, a.name) not in allowed:
+                        offenders.append(f"{path.name}: {node.module}.{a.name}")
+                    engine_names.add(a.asname or a.name)
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith("data_wrangling_spark"):
+                        engine_names.add(a.asname or a.name.split(".")[0])
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr.startswith("_"):
+                root = node.value
+                while isinstance(root, ast.Attribute):
+                    root = root.value
+                if isinstance(root, ast.Name) and root.id in engine_names:
+                    offenders.append(f"{path.name}: {ast.unparse(node)}")
+    assert not offenders, offenders
